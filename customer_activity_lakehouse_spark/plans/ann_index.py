@@ -60,31 +60,28 @@ import tempfile
 import threading
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.snapshots import read_snapshot
 from .ml_ops import (
-    IVF_PROBES,
-    KM_ITERS,
     KM_SCALE,
-    PQ_M,
-    PQ_SUB,
     _centroid_rows,
     _codebook_rows,
     _ivf_cells,
+    _ivf_probe_clusters,
     _ivfpq_sql_chain,
-    _km_assign,
     _km_quantized,
-    _km_update,
     _km_sql_parts,
-    _np_chunk_rows,
+    _lloyd,
+    _md5_value,
     _pq_fit_frame,
     _serve_probes,
     _sql_serve_probes,
     _train_divisor,
 )
-from .registry import Query, table
+from .np_kernels import adc_udf, encode_cells
+from .registry import Query, overlap, table
 
 ANN_TOPK = 10
 # Refine-stage candidate pool (r14, VERDICT r13 missing #2): the ADC
@@ -94,25 +91,6 @@ ANN_TOPK = 10
 # true neighbor inside the probed cells at ADC rank 49, so a 4x pool
 # would still miss it; 8x costs O(80·dim) — noise at any corpus size.
 REFINE_POOL = 8 * ANN_TOPK
-
-
-def _seed_centroids_scaled(embq: DataFrame, k: int) -> DataFrame:
-    """Deterministic hash-bucket seeding for a CORPUS-SIZED cell count:
-    bucket = 8-hex-digit md5 value of vec_id mod k (the legacy one-digit
-    `_km_seed_centroids` idiom caps K at 16 buckets), seed = the bucket's
-    minimum vec_id. Same shape as the fixed-K seeding — one partial-agg
-    pass to ≤k rows + a broadcast join back; the DuckDB twin is
-    `ml_ops._SQL_HEX8 % k` (verified bit-identical)."""
-    hex8 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8)
-    bucket = F.conv(hex8, 16, 10).cast("long") % k
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    return embq.join(F.broadcast(seeds), "vec_id").select(
-        "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
-    )
 
 
 _CENTS_SCHEMA = "cluster int, c array<double>"
@@ -145,16 +123,12 @@ def _local_books(spark: SparkSession, book: dict) -> DataFrame:
 
 
 def _km_fit_scaled(embq: DataFrame, k: int, divisor: int = 1) -> DataFrame:
-    """Lloyd's with a corpus-sized cell count — `ml_ops._km_fit_frame`
-    with the scaled seeding; assign/update are K-agnostic and shared.
-    Returns the TRAINED CENTROIDS as a lineage-free local K-row frame
-    (r14): each update's ≤k rows are collected once per iteration —
-    the same driver-bounded job the pre-r14 broadcast exchange ran, minus
-    the re-execution the old lazy chain paid when the caller pinned or
-    re-read the final frame. The final full-corpus assignment is NOT run
-    here — the build folds it into the single encode pass
-    (`_encode_cells`), so the corpus is scanned once per training
-    iteration plus once to encode, and nothing twice.
+    """Lloyd's with a corpus-sized cell count — `ml_ops._lloyd` with the
+    8-hex-digit seeding. Returns the TRAINED CENTROIDS as a lineage-free
+    local K-row frame. The final full-corpus assignment is NOT run here —
+    the build folds it into the single encode pass (`_encode_cells`), so
+    the corpus is scanned once per training iteration plus once to
+    encode, and nothing twice.
 
     ``divisor`` > 1 trains on the deterministic md5 sample (8-hex-digit
     value % divisor == 0 — `ml_ops._train_divisor`, the FAISS
@@ -162,18 +136,8 @@ def _km_fit_scaled(embq: DataFrame, k: int, divisor: int = 1) -> DataFrame:
     scan ~KM_TRAIN_PER_CELL·k rows instead of the corpus, turning
     training from O(N^1.5·dim) to O(N·dim). divisor=1 (every fixture
     scale) is byte-identical to full-corpus training."""
-    spark = embq.sparkSession
-    train = embq
-    if divisor > 1:
-        hex8 = F.substring(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8
-        )
-        train = embq.filter(F.conv(hex8, 16, 10).cast("long") % divisor == 0)
-    cents = _local_cents(spark, _centroid_rows(_seed_centroids_scaled(train, k)))
-    for _ in range(KM_ITERS - 1):
-        assigned = _km_assign(train, cents)
-        cents = _local_cents(spark, _centroid_rows(_km_update(assigned)))
-    return cents
+    train = embq.filter(_md5_value(8) % divisor == 0) if divisor > 1 else embq
+    return _local_cents(embq.sparkSession, _lloyd(train, k, 8))
 
 
 def _quantize(emb: DataFrame) -> DataFrame:
@@ -188,76 +152,11 @@ def _encode_cells(
     embq: DataFrame, cents: DataFrame, books: DataFrame
 ) -> DataFrame:
     """(vec_id, cell, code[PQ_M]): the coarse-cell argmin AND the per-
-    subspace PQ codes computed in ONE zero-shuffle pass through an
-    Arrow-vectorized NumPy kernel (guide §4.2, §2.4). Replaces the
-    pre-r14 three-stage chain — per-(vec, m) explode → argmin →
-    groupBy(vec_id) collect_list → join back to the cell assignment —
-    which shuffled the 8×-exploded corpus twice (measured 2.3 s of the
-    sf0.1 build) for per-row arithmetic the scan task can do in place.
-
-    Numeric parity: the kernel is the `_km_assign` / `_pq_assign` cumsum
-    + first-argmin contract per stage (pinned in tests/test_np_kernels.py);
-    code order is ascending m, exactly the retired array_sort(collect_list)
-    layout. The centroid/codebook collects are nlist + 128 rows —
-    driver-bounded (the `_ordered_cells` class)."""
-    crows = _centroid_rows(cents)
-    book = _codebook_rows(books)
-    if not crows or not book:
-        # fail at the driver with a diagnosable message instead of an
-        # opaque executor-side broadcasting ValueError inside the kernel
-        raise ValueError(
-            f"_encode_cells: empty centroid ({len(crows)}) or codebook "
-            f"({len(book)}) frame — the index training input has no rows"
-        )
-    sc = embq.sparkSession.sparkContext
-    bc = sc.broadcast(
-        (
-            np.array([c for _, c in crows], dtype=np.float64),
-            np.array([cl for cl, _ in crows], dtype=np.int64),
-            {
-                m: (
-                    np.array([c for _, c in rows], dtype=np.float64),
-                    np.array([cl for cl, _ in rows], dtype=np.int64),
-                )
-                for m, rows in book.items()
-            },
-        )
-    )
-
-    n_cells, dim = len(crows), len(crows[0][1]) if crows else 1
-    chunk = _np_chunk_rows(n_cells, dim)
-
-    @F.pandas_udf("struct<cell:int,code:array<int>>")
-    def enc(q: pd.Series) -> pd.DataFrame:
-        cents_np, clusters_np, books = bc.value
-        if len(q) == 0:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"), "code": []})
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q.values])
-        n = qm.shape[0]
-        cell = np.empty(n, dtype=np.int64)
-        for lo in range(0, n, chunk):  # bound the (rows×cells×dim) temp
-            part = qm[lo : lo + chunk]
-            d = part[:, None, :] - cents_np[None, :, :]
-            d *= d
-            cell[lo : lo + len(part)] = clusters_np[
-                np.argmin(np.cumsum(d, axis=2)[:, :, -1], axis=1)
-            ]
-        codes = np.empty((n, PQ_M), dtype=np.int32)
-        for m in range(PQ_M):
-            cents_m, cl_m = books[m]
-            sub = qm[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            dm = sub[:, None, :] - cents_m[None, :, :]
-            dm *= dm
-            codes[:, m] = cl_m[np.argmin(np.cumsum(dm, axis=2)[:, :, -1], axis=1)]
-        return pd.DataFrame(
-            {"cell": cell.astype("int32"), "code": list(codes)}
-        )
-
-    return embq.select("vec_id", enc("q").alias("__e")).select(
-        "vec_id",
-        F.col("__e.cell").alias("cell"),
-        F.col("__e.code").alias("code"),
-    )
+    subspace PQ codes of every vector in ONE zero-shuffle pass of the
+    Arrow kernel (`np_kernels.encode_cells`) against the collected
+    centroid and codebook frames (nlist + 128 rows, driver-bounded);
+    code order is ascending m."""
+    return encode_cells(embq, _centroid_rows(cents), _codebook_rows(books))
 
 
 def build_ann_index(
@@ -286,33 +185,18 @@ def build_ann_index(
     n = emb.count()  # one metadata-cheap single-column scan
     n_cells = cells if cells is not None else _ivf_cells(n)
     embq = _quantize(emb)
-    # Train ONCE into lineage-free LOCAL frames (r14; replaces the r13
-    # persist-and-pin): the trained state is nlist + PQ_M*PQ_K rows —
-    # collecting it once per training iteration is the same driver-bounded
-    # job the broadcast exchanges ran, and every downstream consumer (the
-    # three commits, the encode kernel) reads the local rows instead of
-    # re-executing any Lloyd lineage. The corpus itself never caches,
-    # collects, or shuffles. r15 (guide §2.6): the coarse-quantizer and
-    # PQ-codebook chains are independent short series of driver-bounded
-    # collect jobs — run them from two driver threads so one chain's
-    # collect latency back-fills the other's (the build was ~10 strictly
-    # sequential jobs; the two training chains are the longest stretch).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cents = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _km_fit_scaled(embq, n_cells, _train_divisor(n, n_cells))
-            )
-        )
-        f_books = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _local_books(spark, _codebook_rows(_pq_fit_frame(embq)))
-            )
-        )
-        cents, books = f_cents.result(), f_books.result()
+    # Train ONCE into lineage-free LOCAL frames: the trained state is
+    # nlist + PQ_M*PQ_K rows, and every downstream consumer (the commits,
+    # the encode kernel) reads the local rows instead of re-executing any
+    # Lloyd lineage. The corpus itself never caches, collects, or
+    # shuffles. The coarse-quantizer and PQ-codebook chains are
+    # independent short series of driver-bounded collect jobs, so they
+    # run from two driver threads (guide §2.6).
+    cents, books = overlap(
+        spark,
+        lambda: _km_fit_scaled(embq, n_cells, _train_divisor(n, n_cells)),
+        lambda: _local_books(spark, _codebook_rows(_pq_fit_frame(embq))),
+    )
     # assign cells AND encode PQ codes in ONE zero-shuffle corpus pass
     # (r14, guide §2.4 / §4.2): bit-identical to the training path's
     # final assignment (same argmin against the same doubles); the
@@ -333,40 +217,24 @@ def build_ann_index(
     # shape: a cell is ~N/nlist ≈ sqrt(N) 4-byte codes, well under one
     # parquet file.
     n_parts = max(1, min(int(n_cells), spark.sparkContext.defaultParallelism))
-    # the three commits target three independent tables: overlap them
-    # (guide §2.6) — the two K-row metadata commits ride along while the
-    # corpus-scale codes encode+write runs
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        jobs = [
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(spark, f"{index_dir}/ivf_centroids", cents)
-                )
-            ),
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(
-                        spark, f"{index_dir}/pq_codebooks", books.orderBy("m", "cluster")
-                    )
-                )
-            ),
-            pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: commit_append(
-                        spark,
-                        f"{index_dir}/codes",
-                        codes.select("vec_id", "cell", "code").repartition(
-                            n_parts, "cell"
-                        ),
-                        stats_cols=["vec_id"],
-                        partition_by=["cell"],
-                        extra=extra,
-                    )
-                )
-            ),
-        ]
-        for j in jobs:
-            j.result()
+    # The two K-row metadata commits overlap each other; codes commit
+    # only once both have landed, so a reader that finds codes always
+    # finds the centroids and codebooks they were encoded against.
+    overlap(
+        spark,
+        lambda: commit_append(spark, f"{index_dir}/ivf_centroids", cents),
+        lambda: commit_append(
+            spark, f"{index_dir}/pq_codebooks", books.orderBy("m", "cluster")
+        ),
+    )
+    commit_append(
+        spark,
+        f"{index_dir}/codes",
+        codes.select("vec_id", "cell", "code").repartition(n_parts, "cell"),
+        stats_cols=["vec_id"],
+        partition_by=["cell"],
+        extra=extra,
+    )
 
 
 def maintain_ann_index(
@@ -389,12 +257,7 @@ def maintain_ann_index(
     retraction-only feed leaves the stamp alone (empty-append
     precedent)."""
     from ..sources.incremental import dv_retract, net_change_feed, stamped_version
-    from ..sources.snapshots import (
-        _list_versions,
-        merge_snapshot,
-        read_snapshot,
-        snapshot_change_feed,
-    )
+    from ..sources.snapshots import _list_versions, merge_snapshot, snapshot_change_feed
 
     codes_dir = f"{index_dir}/codes"
     versions = _list_versions(spark, codes_dir)
@@ -454,10 +317,10 @@ def query_ann_index(
     """Serve top-``k`` for ``query_q`` (one row: quantized ``q``) from the
     persisted index — NO training in this plan:
 
-    1. probe: squared distance of q against the nlist-row centroid
-       table, take the ceil(sqrt(nlist)) nearest (`_serve_probes` of the
-       persisted cell count — a driver-bounded ≤nlist-row collect; the
-       prefix feeds partition pruning);
+    1. probe: the query's squared distance to every centroid of the
+       persisted nlist-row table, ranked on the driver (one ≤nlist-row
+       collect), keeping the ceil(sqrt(nlist)) nearest cells
+       (`_serve_probes` of the persisted cell count);
     2. candidates: ``partition_where={'cell': probes}`` on the codes
        table — manifest-level partition pruning, so only the probed
        cells' files are ever listed;
@@ -474,16 +337,7 @@ def query_ann_index(
 
     Returns (vec_id, cos_sim) — cosine of the PQ-reconstructed vector vs
     the exact query, rounded to 4dp, ties broken by vec_id."""
-    from ..sources.snapshots import read_snapshot
-
-    order = _ordered_cells(spark, index_dir, query_q)
-    probes = order[: _serve_probes(len(order))]
-    codes = read_snapshot(
-        spark, f"{index_dir}/codes", partition_where={"cell": probes}
-    )
-    if exclude_id is not None:
-        codes = codes.filter(F.col("vec_id") != exclude_id)
-    return _adc_topk(spark, index_dir, query_q, codes, k)
+    return _serve(spark, index_dir, query_q, k, exclude_id)
 
 
 def query_ann_index_refined(
@@ -540,198 +394,6 @@ def query_ann_index_refined(
     )
 
 
-def _ordered_cells(
-    spark: SparkSession, index_dir: str, query_q: DataFrame
-) -> list[int]:
-    """ALL IVF cells in ascending squared-distance-to-query order (ties to
-    the smaller cluster id) — one driver-bounded collect of ≤K rows; the
-    prefix of this list is what partition pruning probes."""
-    from ..sources.snapshots import read_snapshot
-
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    rows = (
-        query_q.crossJoin(F.broadcast(carr))
-        .select(F.explode("cents").alias("cent"), "q")
-        .select(F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
-        .orderBy("cdist", "cluster")
-        .collect()
-    )
-    return [int(r["cluster"]) for r in rows]
-
-
-def _adc_cos():
-    """The in-row ADC cosine expression over columns ``qq`` (quantized
-    query), ``code`` (PQ code array) and ``cents`` (broadcast per-m
-    codebooks) — independent of HOW qq arrived on the row, so the
-    single-query (broadcast scalar) and batch (joined per-row) serve
-    paths share the exact fold order and stay bit-identical."""
-
-    def _subvec(arr, m):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_SUB)),
-            lambda i: F.element_at(arr, (m * PQ_SUB + i).cast("int")),
-        )
-
-    def _fold(arr):
-        return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
-
-    def _per_m(m):
-        qv = _subvec(F.col("qq"), m)
-        my_cents = F.element_at(F.col("cents"), (m + 1).cast("int"))
-        cm = F.element_at(F.col("code"), (m + 1).cast("int"))
-        c = F.element_at(
-            F.filter(my_cents, lambda s: s["cluster"] == cm), 1
-        )["c"]
-        return F.struct(
-            _fold(F.zip_with(c, qv, lambda a, b: a * b.cast("double"))).alias(
-                "dot"
-            ),
-            _fold(F.transform(c, lambda x: x * x)).alias("sq"),
-        )
-
-    per_m = F.transform(F.sequence(F.lit(0), F.lit(PQ_M - 1)), _per_m)
-    dots = _fold(F.transform(per_m, lambda s: s["dot"]))
-    sqs = _fold(F.transform(per_m, lambda s: s["sq"]))
-    qnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("qq"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double")
-    )
-    return dots / (F.sqrt(sqs) * qnorm)
-
-
-def _books_arr(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The PQ codebooks collapsed to ONE broadcastable row: per-m sorted
-    (cluster, c) arrays, ordered by m."""
-    from ..sources.snapshots import read_snapshot
-
-    books = read_snapshot(spark, f"{index_dir}/pq_codebooks")
-    return (
-        books.groupBy("m")
-        .agg(F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cm"))
-        .agg(F.array_sort(F.collect_list(F.struct("m", "cm"))).alias("byms"))
-        .select(F.transform("byms", lambda s: s["cm"]).alias("cents"))
-    )
-
-
-def _adc_code_cos_udf(spark: SparkSession, book, qq_fixed: np.ndarray | None):
-    """Arrow kernel for the SERVE path: ADC cosine of stored PQ ``code``
-    rows against a query — codeword lookup by cluster id, then the exact
-    `_adc_cos` fold order (per-m dot/sq partials from the reconstructed
-    codeword, folded ascending-m; qnorm an exact integer fold). With
-    ``qq_fixed`` the query is a kernel constant (single-query serve: no
-    crossJoin machinery at all); without it the kernel reads a per-row
-    ``qq`` column (the batch serve, where each candidate row carries its
-    own query). Pinned equal to the `_adc_cos` expression twin in
-    tests/test_np_kernels.py."""
-    luts = {}
-    for m, rows in book.items():
-        hi = max(cl for cl, _ in rows)
-        lut = np.zeros((hi + 1, len(rows[0][1])), dtype=np.float64)
-        for cl, c in rows:
-            lut[cl] = c
-        luts[m] = lut
-    bc = spark.sparkContext.broadcast(luts)
-
-    def _norms(qm: np.ndarray) -> np.ndarray:
-        # exact integer fold: int64 element squares/sums never round
-        return np.sqrt((qm.astype(np.int64) ** 2).sum(axis=1).astype(np.float64))
-
-    if qq_fixed is not None:
-        q_acc = 0
-        for x in qq_fixed.tolist():  # sequential long fold, as the JVM expr
-            q_acc += x * x
-        qnorm = float(np.sqrt(float(q_acc)))
-        qv = qq_fixed.astype(np.float64)
-
-        @F.pandas_udf("double")
-        def adc(code: pd.Series) -> pd.Series:
-            tabs = bc.value
-            if len(code) == 0:
-                return pd.Series([], dtype="float64")
-            cm = np.stack([np.asarray(v, dtype=np.int64) for v in code.values])
-            n = cm.shape[0]
-            dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-            sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-            for m in range(PQ_M):
-                c = tabs[m][cm[:, m]]
-                qsub = qv[m * PQ_SUB : (m + 1) * PQ_SUB]
-                dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-                sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-            dots = np.cumsum(dot_parts, axis=1)[:, -1]
-            sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-            return pd.Series(dots / (np.sqrt(sqs) * qnorm))
-
-        return adc
-
-    @F.pandas_udf("double")
-    def adc_batch(code: pd.Series, qq: pd.Series) -> pd.Series:
-        tabs = bc.value
-        if len(code) == 0:
-            return pd.Series([], dtype="float64")
-        cm = np.stack([np.asarray(v, dtype=np.int64) for v in code.values])
-        qm = np.stack([np.asarray(v, dtype=np.int64) for v in qq.values])
-        qmf = qm.astype(np.float64)
-        n = cm.shape[0]
-        dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-        sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-        for m in range(PQ_M):
-            c = tabs[m][cm[:, m]]
-            qsub = qmf[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-            sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-        dots = np.cumsum(dot_parts, axis=1)[:, -1]
-        sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-        return pd.Series(dots / (np.sqrt(sqs) * _norms(qm)))
-
-    return adc_batch
-
-
-def _adc_topk(
-    spark: SparkSession,
-    index_dir: str,
-    query_q: DataFrame,
-    codes: DataFrame,
-    k: int,
-) -> DataFrame:
-    """ADC-score a candidate codes frame against the persisted codebooks
-    and take top-k — the shared tail of the filtered and unfiltered serve
-    paths. r14: the scoring runs in the Arrow kernel above (guide §4.2)
-    instead of the interpreted `_adc_cos` HOF expression — same fixed
-    m-order folds, so the doubles stay bit-identical to the retraining
-    oracle; the two broadcast cross joins the expression needed are gone
-    (the 128-row codebook and the 1-row query are kernel constants)."""
-    from ..sources.snapshots import read_snapshot
-
-    book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
-    qrow = query_q.select("q").head()
-    if qrow is None:
-        raise ValueError(
-            "_adc_topk: empty query frame — exactly one query row required"
-        )
-    qq = np.asarray(qrow[0], dtype=np.int64)
-    adc = _adc_code_cos_udf(spark, book, qq)
-    return (
-        codes.select("vec_id", F.round(adc("code"), 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
-
-
 def query_ann_index_batch(
     spark: SparkSession,
     index_dir: str,
@@ -743,17 +405,14 @@ def query_ann_index_batch(
     the throughput shape of a serving tier (one probed-cells scan
     amortized over the whole batch, instead of |batch| separate jobs):
 
-    1. per-query probes DISTRIBUTIVELY: each (qid, q) row folds over the
-       broadcast centroid array and a row_number window PARTITIONED BY
-       qid (bounded: ≤nlist cells per query, WindowGroupLimit) keeps its
-       `_serve_probes(nlist)` nearest cells — no driver work per query;
-    2. ONE partition-pruned read of the UNION of probed cells (the only
-       driver-bounded collect: ≤K distinct cell ids, independent of
-       batch size);
-    3. candidates = codes ⋈ broadcast probe pairs on cell — each code
-       row is scored only for the queries that probed its cell, with the
-       query vector arriving ON the row (same `_adc_cos` folds as the
-       single-query path, bit-identical);
+    1. per-query probes: every query's `_serve_probes(nlist)` nearest
+       cells, ranked on the driver against one ≤nlist-row centroid
+       collect (the queries themselves are one ≤|batch|-row collect);
+    2. ONE partition-pruned read of the UNION of probed cells;
+    3. candidates = codes ⋈ broadcast (qid, cell, query) probe rows on
+       cell — each code row is scored only for the queries that probed
+       its cell, with the query vector arriving ON the row (the same ADC
+       fold as the single-query path, bit-identical);
     4. top-k per query: row_number over partitionBy(qid) — bounded
        partitions (a query's candidates ≤ probed cells' rows),
        WindowGroupLimit-shaped.
@@ -764,52 +423,7 @@ def query_ann_index_batch(
     cos_sim), ordered within each query by (cos_sim desc, vec_id); each
     query's rows equal `query_ann_index`'s for the same vector
     (pytest-pinned)."""
-    from ..sources.snapshots import read_snapshot
-
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    n_probe = _serve_probes(cents.count())  # one nlist-row count
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    w_probe = Window.partitionBy("qid").orderBy("cdist", "cluster")
-    probes = (
-        queries_q.crossJoin(F.broadcast(carr))
-        .select("qid", "q", F.explode("cents").alias("cent"))
-        .select("qid", "q", F.col("cent.cluster").alias("cluster"), cent_dist.alias("cdist"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("qid", F.col("q").alias("qq"), F.col("cluster").alias("cell"))
-    )
-    cell_union = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
-    codes = read_snapshot(
-        spark, f"{index_dir}/codes", partition_where={"cell": cell_union}
-    )
-    cand = codes.join(F.broadcast(probes), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col("vec_id") != F.col("qid"))
-    book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
-    adc = _adc_code_cos_udf(spark, book, None)  # per-row qq (batch serve)
-    scored = cand.select(
-        "qid", "vec_id", F.round(adc("code", "qq"), 4).alias("cos_sim")
-    )
-    w_k = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_k))
-        .filter(F.col("rk") <= k)
-        .select("qid", "vec_id", "cos_sim")
-        .orderBy("qid", F.col("cos_sim").desc(), "vec_id")
-    )
+    return _serve_batch(spark, index_dir, queries_q, k, exclude_self)
 
 
 def query_ann_index_batch_where(
@@ -836,84 +450,7 @@ def query_ann_index_batch_where(
     driver-side state is K cell counts + |batch|·K ranking rows +
     ≤|batch| own-cell rows — all bounded by batch size and cell count,
     never by corpus size."""
-    from ..sources.snapshots import read_snapshot
-
-    cents = read_snapshot(spark, f"{index_dir}/ivf_centroids")
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    cent_dist = F.aggregate(
-        F.zip_with(
-            F.col("q"),
-            F.col("cent.c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    ranking_rows = (
-        queries_q.crossJoin(F.broadcast(carr))
-        .select("qid", F.explode("cents").alias("cent"), "q")
-        .select("qid", F.col("cent.cluster").alias("cell"), cent_dist.alias("cdist"))
-        .orderBy("qid", "cdist", "cell")
-        .collect()
-    )  # |batch|·K rows — driver-bounded by batch size × cell count
-    order: dict[int, list[int]] = {}
-    for r in ranking_rows:
-        order.setdefault(int(r["qid"]), []).append(int(r["cell"]))
-    sem = allowed.select("vec_id")
-    filtered = read_snapshot(spark, f"{index_dir}/codes").join(
-        F.broadcast(sem), "vec_id", "left_semi"
-    )
-    counts = {
-        int(r["cell"]): int(r["n"])
-        for r in filtered.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }  # ≤K rows
-    own_cell: dict[int, int] = {}
-    if exclude_self:
-        qids = sorted(order)
-        own_cell = {
-            int(r["vec_id"]): int(r["cell"])
-            for r in filtered.filter(F.col("vec_id").isin(qids))
-            .select("vec_id", "cell")
-            .collect()
-        }  # ≤|batch| rows
-    used: dict[int, int] = {}
-    for qid, cells in order.items():
-        n_probe = _serve_probes(len(cells))
-        surv, m = 0, 0
-        for m, cell in enumerate(cells, start=1):
-            surv += counts.get(cell, 0)
-            if exclude_self and own_cell.get(qid) == cell:
-                surv -= 1
-            if m >= n_probe and surv >= k:
-                break
-        used[qid] = m
-    probe_pairs = spark.createDataFrame(
-        [(qid, c) for qid, cells in order.items() for c in cells[: used[qid]]],
-        "qid long, cell int",
-    ).join(
-        queries_q.select("qid", F.col("q").alias("qq")), "qid"
-    )
-    cell_union = sorted({c for qid, cells in order.items() for c in cells[: used[qid]]})
-    codes = read_snapshot(
-        spark, f"{index_dir}/codes", partition_where={"cell": cell_union}
-    ).join(F.broadcast(sem), "vec_id", "left_semi")
-    cand = codes.join(F.broadcast(probe_pairs), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col("vec_id") != F.col("qid"))
-    book = _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
-    adc = _adc_code_cos_udf(spark, book, None)  # per-row qq (batch serve)
-    scored = cand.select(
-        "qid", "vec_id", F.round(adc("code", "qq"), 4).alias("cos_sim")
-    )
-    w_k = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_k))
-        .filter(F.col("rk") <= k)
-        .select("qid", "vec_id", "cos_sim")
-        .orderBy("qid", F.col("cos_sim").desc(), "vec_id")
-    )
+    return _serve_batch(spark, index_dir, queries_q, k, exclude_self, allowed)
 
 
 def query_ann_index_where(
@@ -940,31 +477,150 @@ def query_ann_index_where(
     by squared centroid distance (ties to the smaller cluster id); the
     served prefix is the SMALLEST whole-cell prefix of length ≥
     `_serve_probes(nlist)` whose filtered-survivor count reaches ``k``.
-    Each widening
-    step reads ONLY the newly added cell (partition pruning), so total
-    data touched is the final prefix — a selective predicate costs probes
-    proportional to its selectivity, never a full-corpus scan. The loop
-    is driver-side but bounded by the cell count (≤K iterations of one
-    pruned count each), the same bound as the probe collect."""
-    from ..sources.snapshots import read_snapshot
+    Each widening step reads ONLY the newly added cell (partition
+    pruning), so total data touched is the final prefix — a selective
+    predicate costs probes proportional to its selectivity, never a
+    full-corpus scan. The loop is driver-side but bounded by the cell
+    count (≤K iterations of one pruned count each), the same bound as
+    the probe collect."""
+    return _serve(spark, index_dir, query_q, k, exclude_id, allowed)
 
-    order = _ordered_cells(spark, index_dir, query_q)
-    sem = allowed.select("vec_id")
 
-    def _cells_codes(cells: list[int]) -> DataFrame:
-        c = read_snapshot(
-            spark, f"{index_dir}/codes", partition_where={"cell": cells}
-        )
-        if exclude_id is not None:
-            c = c.filter(F.col("vec_id") != exclude_id)
-        return c.join(F.broadcast(sem), "vec_id", "left_semi")
+def _query_vec(query_q: DataFrame) -> np.ndarray:
+    """The one quantized query vector of ``query_q`` (a 1-row collect)."""
+    qrow = query_q.select("q").head()
+    if qrow is None:
+        raise ValueError("empty query frame — exactly one query row required")
+    return np.asarray(qrow[0], dtype=np.int64)
 
+
+def _cell_orders(
+    spark: SparkSession, index_dir: str, qqs: list[np.ndarray]
+) -> list[list[int]]:
+    """For each query, ALL IVF cells in ascending squared-distance order
+    (ties to the smaller cluster id), ranked on the driver by
+    `ml_ops._ivf_probe_clusters` over one ≤nlist-row centroid collect;
+    a prefix of each list is what partition pruning probes."""
+    rows = _centroid_rows(read_snapshot(spark, f"{index_dir}/ivf_centroids"))
+    return [_ivf_probe_clusters(rows, qq, len(rows)) for qq in qqs]
+
+
+def _prefix(order: list[int], k: int, survivors=None) -> int:
+    """How many leading cells of ``order`` a serve probes:
+    `_serve_probes(nlist)`, or — given a ``survivors(cells)`` count (the
+    filtered serves) — the smallest whole-cell prefix at least that long
+    whose count reaches ``k``, else every cell. Each widening step counts
+    only the newly added cell."""
     used = min(_serve_probes(len(order)), len(order))
-    survivors = _cells_codes(order[:used]).count()
-    while survivors < k and used < len(order):
-        survivors += _cells_codes(order[used : used + 1]).count()
-        used += 1
-    return _adc_topk(spark, index_dir, query_q, _cells_codes(order[:used]), k)
+    if survivors is not None:
+        n = survivors(order[:used])
+        while n < k and used < len(order):
+            n += survivors(order[used : used + 1])
+            used += 1
+    return used
+
+
+def _codes(
+    spark: SparkSession, index_dir: str, cells: list[int] | None, allowed: DataFrame | None
+) -> DataFrame:
+    """The codes of ``cells`` (partition-pruned; every cell when None),
+    semi-joined to ``allowed`` when a predicate is given."""
+    codes = read_snapshot(
+        spark,
+        f"{index_dir}/codes",
+        partition_where=None if cells is None else {"cell": cells},
+    )
+    if allowed is None:
+        return codes
+    return codes.join(F.broadcast(allowed.select("vec_id")), "vec_id", "left_semi")
+
+
+def _book(spark: SparkSession, index_dir: str):
+    return _codebook_rows(read_snapshot(spark, f"{index_dir}/pq_codebooks"))
+
+
+def _serve(
+    spark: SparkSession,
+    index_dir: str,
+    query_q: DataFrame,
+    k: int,
+    exclude_id: int | None,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """One query: probe → pruned read → ADC score → top-k, the core of
+    :func:`query_ann_index` and (with ``allowed``) :func:`query_ann_index_where`.
+    The codebook and the query are kernel constants, so the plan is
+    scan → in-row scoring → TakeOrdered."""
+    qq = _query_vec(query_q)
+    order = _cell_orders(spark, index_dir, [qq])[0]
+
+    def cand(cells: list[int]) -> DataFrame:
+        c = _codes(spark, index_dir, cells, allowed)
+        return c if exclude_id is None else c.filter(F.col("vec_id") != exclude_id)
+
+    count = None if allowed is None else (lambda cells: cand(cells).count())
+    adc = adc_udf(spark, _book(spark, index_dir), qq)
+    return (
+        cand(order[: _prefix(order, k, count)])
+        .select("vec_id", F.round(adc("code"), 4).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), "vec_id")
+        .limit(k)
+    )
+
+
+def _serve_batch(
+    spark: SparkSession,
+    index_dir: str,
+    queries_q: DataFrame,
+    k: int,
+    exclude_self: bool,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """A query batch: the batch core of :func:`query_ann_index_batch` and
+    (with ``allowed``) :func:`query_ann_index_batch_where`."""
+    qrows = [
+        (int(r["qid"]), np.asarray(r["q"], dtype=np.int64))
+        for r in queries_q.select("qid", "q").collect()
+    ]  # ≤|batch| rows
+    orders = _cell_orders(spark, index_dir, [qq for _, qq in qrows])
+    counts: dict[int, int] = {}
+    own: dict[int, int] = {}
+    if allowed is not None:
+        filtered = _codes(spark, index_dir, None, allowed)
+        counts = {
+            int(r["cell"]): int(r["n"])
+            for r in filtered.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
+        }  # ≤K rows
+        if exclude_self:
+            own = {
+                int(r["vec_id"]): int(r["cell"])
+                for r in filtered.filter(F.col("vec_id").isin([q for q, _ in qrows]))
+                .select("vec_id", "cell")
+                .collect()
+            }  # ≤|batch| rows
+    probes = []
+    for (qid, qq), order in zip(qrows, orders):
+
+        def survivors(cells: list[int], own_cell: int | None = own.get(qid)) -> int:
+            return sum(counts.get(c, 0) - (c == own_cell) for c in cells)
+
+        used = _prefix(order, k, None if allowed is None else survivors)
+        probes += [(qid, c, qq.tolist()) for c in order[:used]]
+    pairs = spark.createDataFrame(probes, "qid long, cell int, qq array<bigint>")
+    cand = _codes(spark, index_dir, sorted({c for _, c, _ in probes}), allowed).join(
+        F.broadcast(pairs), "cell"
+    )
+    if exclude_self:
+        cand = cand.filter(F.col("vec_id") != F.col("qid"))
+    adc = adc_udf(spark, _book(spark, index_dir))  # per-row query
+    scored = cand.select("qid", "vec_id", F.round(adc("code", "qq"), 4).alias("cos_sim"))
+    w_k = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "vec_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w_k))
+        .filter(F.col("rk") <= k)
+        .select("qid", "vec_id", "cos_sim")
+        .orderBy("qid", F.col("cos_sim").desc(), "vec_id")
+    )
 
 
 # --------------------------------------------------------------- catalog
@@ -997,8 +653,6 @@ def q_ann_index_build(spark: SparkSession, sf: str) -> DataFrame:
     IVF cell with its vector count and centroid L2 norm (4dp) — read
     back from the COMMITTED tables, so the oracle checks what landed on
     disk, not what training computed in memory."""
-    from ..sources.snapshots import read_snapshot
-
     idx = _index_dir(spark, sf)
     codes = read_snapshot(spark, f"{idx}/codes")
     cents = read_snapshot(spark, f"{idx}/ivf_centroids")

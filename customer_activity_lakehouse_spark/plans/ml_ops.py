@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import dim_join
 from .core import MONEY, SQL_REV, revenue
-from .registry import Query, materialize, table
+from .np_kernels import adc_udf, assign_rows, pq_assign_rows
+from .registry import Query, materialize, overlap, table
 
 
 def _ml_tokens(c):
@@ -86,190 +87,84 @@ def _km_quantized(spark: SparkSession, sf: str) -> DataFrame:
     return emb.select("vec_id", q.alias("q"))
 
 
-def _km_seed_centroids(embq: DataFrame) -> DataFrame:
-    """Deterministic hash-bucket seeding: cluster k seeds from the minimum
-    vec_id of md5-bucket k. One partial-agg pass to ≤K rows + a broadcast
-    join back for the seed vectors — no global sort, no driver collect."""
-    hex1 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 1)
-    # conv(hex, 16, 10) == DuckDB's strpos('0123456789abcdef', hex) - 1 for
-    # one hex digit — the cross-engine digit-value idiom
-    bucket = F.conv(hex1, 16, 10).cast("int") % KM_K
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
+def _md5_value(digits: int):
+    """The first ``digits`` hex digits of md5(vec_id) as a BIGINT — the
+    cross-engine bucketing value (DuckDB twins: the strpos digit idiom for
+    one digit, `_SQL_HEX8` for eight)."""
+    hexd = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, digits)
+    return F.conv(hexd, 16, 10).cast("long")
+
+
+def _seed_ids(embq: DataFrame, k: int, digits: int) -> DataFrame:
+    """Deterministic hash-bucket seeding: (cluster, vec_id) with cluster =
+    the ``digits``-hex-digit md5 value of vec_id mod ``k`` and the seed its
+    bucket's minimum vec_id. One digit is the oracle-anchored rule of the
+    fixed-K entries (k ≤ 16); eight cover any k below 2^32 (the persisted
+    index and SemDeDup). One partial-agg pass to ≤k rows — no global
+    sort, no driver collect."""
+    return (
+        embq.select((_md5_value(digits) % k).cast("int").alias("cluster"), "vec_id")
         .groupBy("cluster")
         .agg(F.min("vec_id").alias("vec_id"))
     )
-    return embq.join(F.broadcast(seeds), "vec_id").select(
+
+
+def _seed_centroids(embq: DataFrame, k: int, digits: int) -> DataFrame:
+    """(cluster, c): the `_seed_ids` vectors, broadcast-joined back."""
+    return embq.join(F.broadcast(_seed_ids(embq, k, digits)), "vec_id").select(
         "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
     )
-
-
-def _km_assign_expr(embq: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Map-side argmin, pure-JVM expression form: centroids collapse to ONE
-    broadcast row holding a sorted array<struct<cluster,c>>; each vector
-    folds over it computing squared distances and takes array_min of
-    (dist, cluster) structs — ties break toward the smaller cluster id in
-    both engines. Vectors never shuffle.
-
-    Kept as the reference twin of the Arrow kernel below (pinned equal in
-    tests/test_np_kernels.py): interpreted HOF lambdas cost ~1.7 s per
-    assignment pass at sf0.1 (2000 rows x 45 cells x 64 dims — measured
-    r14), which the NumPy batch path does in ~0.05 s with bit-identical
-    doubles."""
-    carr = centroids.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    dist_structs = F.transform(
-        F.col("cents"),
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("q"), s["c"], lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-            s["cluster"].alias("cluster"),
-        ),
-    )
-    best = F.array_min(dist_structs)
-    return embq.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "q", best["cluster"].alias("cluster"), best["dist"].alias("dist")
-    )
-
-
-# Row-chunk budget for the (rows x cells x dim) distance temp inside the
-# Arrow kernels: 32 MiB of float64 per chunk, so a corpus-sized cell count
-# (nlist = sqrt(N), e.g. 31.6k cells at 1e9 vectors) never materializes a
-# multi-GB intermediate inside one Python worker batch.
-_NP_CHUNK_BYTES = 32 * 1024 * 1024
-
-
-def _np_chunk_rows(n_cells: int, dim: int) -> int:
-    return max(1, _NP_CHUNK_BYTES // (8 * max(1, n_cells) * max(1, dim)))
 
 
 def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     """Driver-bounded collect of a ≤nlist-row centroid frame, sorted by
     cluster id (the argmin tie order) — the same bounded-collect class as
-    the serve-path probe ordering (ann_index._ordered_cells)."""
+    the serve-path probe ranking (ann_index._cell_orders)."""
     return sorted((int(r["cluster"]), list(r["c"])) for r in centroids.collect())
 
 
-def _km_assign(embq: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Map-side argmin via an Arrow-vectorized NumPy kernel (guide §4.2):
-    the ≤nlist-row centroid frame is collected once (driver-bounded, the
-    `_ordered_cells` precedent), shipped as a Spark broadcast, and each
-    Arrow batch computes every vector's squared distance to every centroid
-    in one vectorized pass. Vectors never shuffle and never cross a join —
-    the old BroadcastNestedLoop cross join disappears from the plan.
-
-    Numeric parity (the q_ann_topk_pandas doctrine): per-(vector,
-    centroid) distances reduce with ``np.cumsum(..., axis=-1)`` taking the
-    last column — a LEFT-TO-RIGHT sequential scan, the exact float-op
-    order of the JVM ``aggregate`` fold and the DuckDB list_sum twin
-    (a BLAS matmul would reassociate the additions and break the oracle
-    hash); ``np.argmin`` returns the FIRST minimum, which over the
-    cluster-sorted matrix is exactly array_min's (dist, cluster) tie
-    order. Pinned equal to `_km_assign_expr` in tests/test_np_kernels.py."""
-    rows = _centroid_rows(centroids)
-    if not rows:  # degenerate empty-centroid frame: keep the legacy shape
-        return _km_assign_expr(embq, centroids)
-    return _km_assign_rows(embq, rows)
-
-
-def _km_assign_rows(embq: DataFrame, rows: list[tuple[int, list[float]]]) -> DataFrame:
-    """`_km_assign`'s kernel over PRE-COLLECTED centroid rows (r15): the
-    training loop and the probe both need the collected rows, so collect
-    once and share. Preserves every input column (the serve paths carry
-    the raw embedding through the assignment, killing their vec_id
-    join-back)."""
-    sc = embq.sparkSession.sparkContext
-    bc = sc.broadcast(
-        (
-            np.array([c for _, c in rows], dtype=np.float64),
-            np.array([cl for cl, _ in rows], dtype=np.int64),
-        )
-    )
-    dim = len(rows[0][1])
-    chunk = _np_chunk_rows(len(rows), dim)
-
-    @F.pandas_udf("struct<cluster:int,dist:double>")
-    def assign(q: pd.Series) -> pd.DataFrame:
-        cents, clusters = bc.value
-        out_cl = np.empty(len(q), dtype=np.int64)
-        out_d = np.empty(len(q), dtype=np.float64)
-        vals = q.values
-        for lo in range(0, len(q), chunk):
-            part = vals[lo : lo + chunk]
-            qm = np.stack([np.asarray(v, dtype=np.float64) for v in part])
-            d = qm[:, None, :] - cents[None, :, :]
-            d *= d
-            dist = np.cumsum(d, axis=2)[:, :, -1]
-            idx = np.argmin(dist, axis=1)
-            out_cl[lo : lo + len(part)] = clusters[idx]
-            out_d[lo : lo + len(part)] = dist[np.arange(len(part)), idx]
-        return pd.DataFrame(
-            {"cluster": out_cl.astype("int32"), "dist": out_d}
-        )
-
-    return embq.withColumn("__r", assign("q")).select(
-        *[F.col(c) for c in embq.columns],
-        F.col("__r.cluster").alias("cluster"),
-        F.col("__r.dist").alias("dist"),
-    )
-
-
-def _km_update(assigned: DataFrame) -> DataFrame:
-    """Centroid update as KM_DIM integer-sum aggregates + one count —
+def _km_update(assigned: DataFrame, dim: int = KM_DIM) -> DataFrame:
+    """Centroid update as ``dim`` integer-sum aggregates + one count —
     partial-aggregable (map-side combine) down to K rows; the single
-    sum/count division is the only float op, deterministic IEEE.  The 65
-    aggregates are ONE SQL expression string, not 65 Column objects —
+    sum/count division is the only float op, deterministic IEEE.  The
+    aggregates are ONE SQL expression string, not dim+1 Column objects —
     per-Column py4j round-trips cost ~1 s/call of pure driver time
     (same lesson as q_ann_ivf_topk, llm_ops.py)."""
     sums_sql = (
         "struct(count(1) as n, "
-        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(KM_DIM))
+        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(dim))
         + ") as acc"
     )
     arr_sql = (
-        "array(" + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(KM_DIM)) + ") as c"
+        "array(" + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(dim)) + ") as c"
     )
     return assigned.groupBy("cluster").agg(F.expr(sums_sql)).selectExpr("cluster", arr_sql)
 
 
-def _km_fit_frame(
-    embq: DataFrame,
-) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]] | None]:
-    """Frame-based Lloyd core (shared with the persisted ANN index, which
-    trains over snapshot-table corpora rather than the sf fixture).
-    Returns (final assignments, the centroid frame those assignments used,
-    the COLLECTED rows of that frame). The assignment kernel collects the
-    centroids every iteration anyway (r14); keeping the last collect lets
-    the IVF probe rank cells on the driver instead of re-executing the
-    centroid lineage (a full corpus pass) inside the serve plan (r15)."""
-    centroids = _km_seed_centroids(embq)
-    assigned = cents_used = rows_used = None
-    for _ in range(KM_ITERS):
-        cents_used = centroids
-        rows_used = _centroid_rows(centroids) or None
-        assigned = (
-            _km_assign_rows(embq, rows_used)
-            if rows_used
-            else _km_assign_expr(embq, centroids)
-        )
-        centroids = _km_update(assigned)
-    return assigned, cents_used, rows_used
+def _lloyd(
+    train: DataFrame, k: int, digits: int, iters: int = KM_ITERS, dim: int = KM_DIM
+) -> list[tuple[int, list[float]]]:
+    """The one Lloyd loop: `_seed_ids` seeding, then ``iters - 1`` updates,
+    each a map-side argmin over ``train`` (the Arrow kernel against the
+    broadcast centroid rows — vectors never shuffle) and a cluster-keyed
+    partial-agg update collected to ≤k rows. Returns the collected
+    centroid rows the final, ``iters``-th assignment runs against; the
+    caller runs that assignment over whatever frame it serves (the corpus,
+    a frame carrying extra columns, or the index build's encode pass), so
+    no Lloyd lineage is ever re-executed and the IVF probe ranks cells
+    on the driver from these rows."""
+    rows = _centroid_rows(_seed_centroids(train, k, digits))
+    for _ in range(iters - 1):
+        rows = _centroid_rows(_km_update(assign_rows(train, rows), dim))
+    return rows
 
 
-def _km_fit(
-    spark: SparkSession, sf: str
-) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]] | None]:
-    """Run KM_ITERS Lloyd iterations; returns (final assignments, the
-    centroids those assignments were computed against, the collected rows
-    of those centroids) — the probe must use them to stay consistent with
-    the cells."""
-    return _km_fit_frame(_km_quantized(spark, sf))
+def _km_fit(spark: SparkSession, sf: str) -> DataFrame:
+    """KM_ITERS fixed-K Lloyd iterations over the fixture embeddings
+    (one-hex-digit seeding); returns the final (vec_id, q, cluster, dist)
+    assignments."""
+    embq = _km_quantized(spark, sf)
+    return assign_rows(embq, _lloyd(embq, KM_K, 1))
 
 
 def q_embedding_kmeans(spark: SparkSession, sf: str) -> DataFrame:
@@ -282,8 +177,7 @@ def q_embedding_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     partial-agg groupBy to K rows. The vectors are scanned KM_ITERS times
     but NEVER shuffled; total shuffle volume is O(K · dim · partitions)
     per iteration — the canonical distributed k-means."""
-    assigned, _, _ = _km_fit(spark, sf)
-    return assigned.select("vec_id", "cluster", F.round("dist", 4).alias("dist"))
+    return _km_fit(spark, sf).select("vec_id", "cluster", F.round("dist", 4).alias("dist"))
 
 
 # 8-hex-digit md5 value as a BIGINT — DuckDB twin of Spark's
@@ -461,41 +355,21 @@ def _fetch_qq(spark: SparkSession, sf: str) -> np.ndarray | None:
     return None if qrow is None else np.asarray(qrow[0], dtype=np.int64)
 
 
-def _ivf_cand_assigned(
-    spark: SparkSession,
-    sf: str,
-    base: DataFrame | None = None,
-    qq: np.ndarray | None = None,
+def _ivf_cand(
+    frame: DataFrame, rows: list[tuple[int, list[float]]], qq: np.ndarray | None
 ) -> DataFrame:
-    """IVF candidate ROWS: k-means-train the coarse quantizer, rank the
-    query's IVF_PROBES nearest cells on the driver (`_ivf_probe_clusters`),
-    and return the final assignment pass filtered to those cells — ONE
-    corpus scan with a map-side cluster filter, zero joins, zero shuffles
-    (r15; the r14 shape broadcast-joined a probe frame whose lineage was a
-    full corpus pass, then the callers joined the candidates back to the
-    corpus by vec_id — a second full scan plus a fact-sized shuffle join).
-    ``base`` carries extra columns (e.g. the raw embedding) through the
-    assignment kernel so callers never join back. Returns every `embq`
-    column (or ``base``'s) plus (cluster, dist)."""
-    embq = _km_quantized(spark, sf)
-    assigned, cents, rows = _km_fit_frame(embq)
-    if not rows:  # degenerate empty corpus: nothing to probe or score
-        out = assigned if base is None else _km_assign_expr(base, cents)
-        return out.filter(F.col("vec_id") != 0).limit(0)
-    if qq is None:
-        qq = _fetch_qq(spark, sf)
-    if qq is None:  # no query vector: the legacy plan returned no rows
-        out = assigned if base is None else _km_assign_rows(base, rows)
-        return out.filter(F.col("vec_id") != 0).limit(0)
-    probes = _ivf_probe_clusters(rows, qq)
-    out = assigned if base is None else _km_assign_rows(base, rows)
-    return out.filter(F.col("cluster").isin(probes) & (F.col("vec_id") != 0))
-
-
-def _ivf_cand(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF candidate vec_ids (the r13-shaped API, kept for the SQL-twin
-    docs): `_ivf_cand_assigned` projected to the id column."""
-    return _ivf_cand_assigned(spark, sf).select("vec_id")
+    """IVF candidate ROWS: every column of ``frame`` plus (cluster, dist)
+    from the final assignment against the trained centroid ``rows``,
+    filtered map-side to the query's IVF_PROBES nearest cells (ranked on
+    the driver by `_ivf_probe_clusters`) minus the query row — one corpus
+    scan, no join, no shuffle. Carrying extra columns (the raw embedding)
+    through the assignment spares callers a join back. Empty, with the
+    same schema, when there is no query vector or no trained cell (an
+    empty corpus)."""
+    probes = [] if qq is None else _ivf_probe_clusters(rows, qq)
+    return assign_rows(frame, rows).filter(
+        F.col("cluster").isin(probes) & (F.col("vec_id") != 0)
+    )
 
 
 def q_ann_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -523,7 +397,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
         "embedding",
         F.transform("embedding", lambda x: F.floor(x.cast("double") * KM_SCALE)).alias("q"),
     )
-    cand = _ivf_cand_assigned(spark, sf, base=base)
+    cand = _ivf_cand(base, _lloyd(_km_quantized(spark, sf), KM_K, 1), _fetch_qq(spark, sf))
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     cos = _dot_expr(F.col("embedding"), F.col("q_emb")) / (
         _norm_expr(F.col("embedding")) * _norm_expr(F.col("q_emb"))
@@ -1164,27 +1038,6 @@ def _capped_cell_pairs(assigned: DataFrame, cell_cap: int, cos_floor: float) -> 
     )
 
 
-def _km_update_dim(assigned: DataFrame, dim: int) -> DataFrame:
-    """_km_update with a caller-chosen dimension (the shared helper pins
-    KM_DIM — the fixture width — and its source anchors eight recorded
-    oracle fingerprints, so the generic operator gets its own 3-liner)."""
-    sums_sql = (
-        "struct(count(1) as n, "
-        + ", ".join(f"sum(element_at(q, {i + 1})) as s{i}" for i in range(dim))
-        + ") as acc"
-    )
-    arr_sql = (
-        "array("
-        + ", ".join(f"cast(acc.s{i} as double) / acc.n" for i in range(dim))
-        + ") as c"
-    )
-    return (
-        assigned.groupBy("cluster")
-        .agg(F.expr(sums_sql))
-        .selectExpr("cluster", arr_sql)
-    )
-
-
 def semantic_dedup_pairs(
     embq: DataFrame,
     k: int,
@@ -1202,32 +1055,11 @@ def semantic_dedup_pairs(
     regardless (candidates ≤ k·cell_cap² even under skewed clustering).
 
     Input: (vec_id, q array<long>) integer-quantized embeddings (the
-    ``_km_quantized`` contract). Seeding re-states the md5-bucket rule
-    over 8 hex digits so it stays uniform for k > 16 — deliberately NOT a
-    parameterization of ``_km_seed_centroids``, whose source anchors the
-    recorded fingerprints of eight oracle entries. Per iteration:
-    broadcast-k centroids, map-side argmin, partial-agg update — vectors
+    ``_km_quantized`` contract). Seeding buckets by the 8-hex-digit md5
+    value so it stays uniform for k > 16. Per iteration: broadcast-k
+    centroids, map-side argmin, partial-agg update (`_lloyd`) — vectors
     never shuffle until the single cluster-keyed pair join."""
-    buck = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % k
-    )
-    seeds = (
-        embq.select(buck.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    centroids = embq.join(F.broadcast(seeds), "vec_id").select(
-        "cluster", F.transform("q", lambda x: x.cast("double")).alias("c")
-    )
-    assigned = None
-    for _ in range(iters):
-        assigned = _km_assign(embq, centroids)
-        centroids = _km_update_dim(assigned, dim)
+    assigned = assign_rows(embq, _lloyd(embq, k, 8, iters, dim))
     return _capped_cell_pairs(assigned, cell_cap, cos_floor)
 
 
@@ -1249,8 +1081,7 @@ def q_dedup_semantic_cells(spark: SparkSession, sf: str) -> DataFrame:
     compiles to WindowGroupLimit). Similarity is cosine over the same
     integer-quantized vectors the clustering uses, so both engines are
     bit-exact; distances compare after the same 4dp rounding both emit."""
-    assigned, _, _ = _km_fit(spark, sf)
-    return _capped_cell_pairs(assigned, SEMDEDUP_CELL_CAP, SEMDEDUP_COS)
+    return _capped_cell_pairs(_km_fit(spark, sf), SEMDEDUP_CELL_CAP, SEMDEDUP_COS)
 
 
 def _semantic_cells_sql() -> str:
@@ -1295,9 +1126,9 @@ def q_semantic_cell_audit(spark: SparkSession, sf: str) -> DataFrame:
     production audits pass ``SEMDEDUP_CELL_CAP``. An operator watching
     this row stream resizes K (see :func:`semantic_dedup_pairs`) when
     cells outgrow the cap."""
-    assigned, _, _ = _km_fit(spark, sf)
     return (
-        assigned.groupBy("cluster")
+        _km_fit(spark, sf)
+        .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_members"))
         .filter(F.col("n_members") > SEMDEDUP_AUDIT_CAP)
         .select(
@@ -2903,65 +2734,19 @@ def _pq_fit_frame(embq: DataFrame) -> DataFrame:
     """Train all PQ_M codebooks in ONE grouped Lloyd's loop: assignment is
     a per-(vec,subspace) argmin against that subspace's 16 centroids
     (128-row broadcast), update is a (m, cluster)-keyed integer-sum
-    partial agg — the same machinery as `_km_fit`, keyed by subspace.
+    partial agg — the same machinery as `_lloyd`, keyed by subspace.
     Returns the trained codebook (m, cluster, c[PQ_SUB] doubles)."""
     sub_rows = _pq_subrows(embq)
-    hex1 = F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 1)
-    bucket = F.conv(hex1, 16, 10).cast("int") % PQ_K
-    seeds = (
-        embq.select(bucket.cast("int").alias("cluster"), "vec_id")
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("vec_id"))
-    )
-    cents = sub_rows.join(F.broadcast(seeds), "vec_id").select(
+    cents = sub_rows.join(F.broadcast(_seed_ids(embq, PQ_K, 1)), "vec_id").select(
         "m", "cluster", F.transform("sq", lambda x: x.cast("double")).alias("c")
     )
     for _ in range(PQ_ITERS - 1):
-        assigned = _pq_assign(sub_rows, cents)
-        cents = _pq_update(assigned)
+        cents = _pq_update(pq_assign_rows(sub_rows, _codebook_rows(cents)))
     return cents
 
 
 def _pq_fit(spark: SparkSession, sf: str) -> DataFrame:
     return _pq_fit_frame(_km_quantized(spark, sf))
-
-
-def _pq_cents_by_m(cents: DataFrame):
-    """Collapse the codebook to ONE broadcastable row: cents[m+1] = the
-    m-th subspace's 16 (cluster, c) structs, cluster-sorted."""
-    return (
-        cents.groupBy("m")
-        .agg(F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cm"))
-        .agg(F.array_sort(F.collect_list(F.struct("m", "cm"))).alias("byms"))
-        .select(F.transform("byms", lambda s: s["cm"]).alias("cents"))
-    )
-
-
-def _pq_assign_expr(sub_rows: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-(vec, subspace) argmin, pure-JVM expression form — map-side
-    against the broadcast codebook row; ties break toward the smaller
-    cluster id. Reference twin of the Arrow kernel below (pinned equal in
-    tests/test_np_kernels.py)."""
-    carr = _pq_cents_by_m(cents)
-    my_cents = F.element_at(F.col("cents"), (F.col("m") + 1).cast("int"))
-    dist_structs = F.transform(
-        my_cents,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("sq"), s["c"],
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-            s["cluster"].alias("cluster"),
-        ),
-    )
-    best = F.array_min(dist_structs)
-    return sub_rows.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "m", "sq", best["cluster"].alias("cluster")
-    )
 
 
 def _codebook_rows(cents: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
@@ -2972,49 +2757,6 @@ def _codebook_rows(cents: DataFrame) -> dict[int, list[tuple[int, list[float]]]]
     for r in cents.collect():
         by_m.setdefault(int(r["m"]), []).append((int(r["cluster"]), list(r["c"])))
     return {m: sorted(v) for m, v in by_m.items()}
-
-
-def _pq_assign(sub_rows: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-(vec, subspace) argmin via an Arrow-vectorized NumPy kernel
-    (guide §4.2): the ≤128-row codebook is collected once and broadcast;
-    each Arrow batch groups its rows by subspace and computes every
-    subvector's distance to that subspace's centroids in one vectorized
-    pass. Same cumsum/first-argmin numeric-parity contract as
-    `_km_assign`; pinned equal to `_pq_assign_expr` in
-    tests/test_np_kernels.py."""
-    book = _codebook_rows(cents)
-    if not book:
-        return _pq_assign_expr(sub_rows, cents)
-    sc = sub_rows.sparkSession.sparkContext
-    bc = sc.broadcast(
-        {
-            m: (
-                np.array([c for _, c in rows], dtype=np.float64),
-                np.array([cl for cl, _ in rows], dtype=np.int64),
-            )
-            for m, rows in book.items()
-        }
-    )
-
-    @F.pandas_udf("int")
-    def passign(m: pd.Series, sq: pd.Series) -> pd.Series:
-        books = bc.value
-        ms = m.values.astype(np.int64)
-        out = np.empty(len(ms), dtype=np.int64)
-        sqv = sq.values
-        for mm in np.unique(ms):
-            mask = np.nonzero(ms == mm)[0]
-            sub = np.stack([np.asarray(sqv[i], dtype=np.float64) for i in mask])
-            cents_m, clusters_m = books[int(mm)]
-            d = sub[:, None, :] - cents_m[None, :, :]
-            d *= d
-            dist = np.cumsum(d, axis=2)[:, :, -1]
-            out[mask] = clusters_m[np.argmin(dist, axis=1)]
-        return pd.Series(out).astype("int32")
-
-    return sub_rows.select(
-        "vec_id", "m", "sq", passign("m", "sq").alias("cluster")
-    )
 
 
 def _pq_update(assigned: DataFrame) -> DataFrame:
@@ -3056,109 +2798,29 @@ def q_ann_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     the PQ-reconstructed vector vs the exact query, rounded to 4dp.
     The 1-row query fetch overlaps the codebook training from a second
     driver thread (guide §2.6)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     embq = _km_quantized(spark, sf)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_qq = pool.submit(inheritable_thread_target(spark)(lambda: _fetch_qq(spark, sf)))
-        f_book = pool.submit(
-            inheritable_thread_target(spark)(lambda: _codebook_rows(_pq_fit(spark, sf)))
-        )
-        qq, book = f_qq.result(), f_book.result()
-    if qq is None:
-        raise ValueError("q_ann_pq_topk: no query vector (vec_id = 0)")
-    return _pq_adc_topk(
-        spark, sf, embq.filter(F.col("vec_id") != 0), book=book, qq=qq
+    qq, book = overlap(
+        spark, lambda: _fetch_qq(spark, sf), lambda: _codebook_rows(_pq_fit(spark, sf))
     )
+    return _pq_adc_topk(spark, embq.filter(F.col("vec_id") != 0), book, qq)
 
 
 def _pq_adc_topk(
-    spark: SparkSession,
-    sf: str,
-    corpus: DataFrame,
-    book=None,
-    qq: np.ndarray | None = None,
+    spark: SparkSession, corpus: DataFrame, book, qq: np.ndarray | None
 ) -> DataFrame:
-    """ADC top-10 over ``corpus`` (a (vec_id, q) frame): train the PQ
-    codebook, then score every candidate against the query through an
-    Arrow-vectorized NumPy kernel (guide §4.2) and TakeOrdered. Shared by
-    whole-corpus PQ and IVF-PQ (which passes the probed-cell candidates
-    only).
-
-    The kernel replicates the JVM expression fold op-for-op (cumsum =
-    sequential left fold; first-argmin over the cluster-sorted codebook =
-    array_min's (dist, cluster) tie order; per-subspace partials folded in
-    fixed m order; qnorm an exact integer sum) — pinned equal to the
-    retired expression form by the unchanged DuckDB oracle and
-    tests/test_np_kernels.py. The codebook collect is ≤PQ_M·PQ_K = 128
-    rows; the query collect is one row — both driver-bounded.
-    ``book`` lets a caller that already trained (or trained concurrently
-    — q_ann_ivfpq_topk overlaps the IVF and PQ chains, guide §2.6) pass
-    the collected codebook in."""
-    if book is None:
-        book = _codebook_rows(_pq_fit(spark, sf))
+    """ADC top-10 over ``corpus`` (a (vec_id, q) frame) under the collected
+    PQ codebook ``book``: every candidate is encoded and scored against
+    the query ``qq`` in-row by the Arrow kernel (`np_kernels.adc_udf`),
+    then TakeOrdered. Shared by whole-corpus PQ and IVF-PQ (which passes
+    the probed-cell candidates only)."""
     if qq is None:
-        qq = _fetch_qq(spark, sf)
-        if qq is None:
-            raise ValueError(
-                "_pq_adc_topk: no query vector (vec_id = 0) in the corpus"
-            )
-    adc = _adc_cos_udf(spark, book, qq)
+        raise ValueError("_pq_adc_topk: no query vector (vec_id = 0) in the corpus")
+    adc = adc_udf(spark, book, qq, encode=True)
     return (
         corpus.select("vec_id", F.round(adc(F.col("q")), 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
     )
-
-
-def _adc_cos_udf(spark: SparkSession, book, qq: np.ndarray):
-    """Arrow kernel: ADC cosine of each row's quantized vector ``q``
-    against the fixed quantized query ``qq`` under PQ codebook ``book``
-    ({m: [(cluster, c), ...] cluster-sorted}). Per subspace the candidate
-    subvector picks its nearest codeword (sequential-fold distances,
-    first-min ties) and contributes dot/sq partials from the RECONSTRUCTED
-    codeword; partials fold in fixed m order. Bit-identical to the JVM
-    `_per_m` expression chain it replaces."""
-    cents_by_m = {
-        m: (
-            np.array([c for _, c in rows], dtype=np.float64),
-            np.array([cl for cl, _ in rows], dtype=np.int64),
-        )
-        for m, rows in book.items()
-    }
-    bc = spark.sparkContext.broadcast(cents_by_m)
-    q_acc = 0
-    for x in qq.tolist():  # exact integer norm fold, matching the JVM long fold
-        q_acc += x * x
-    qnorm = float(np.sqrt(float(q_acc)))
-    qv = qq.astype(np.float64)
-
-    @F.pandas_udf("double")
-    def adc(q: pd.Series) -> pd.Series:
-        books = bc.value
-        if len(q) == 0:
-            return pd.Series([], dtype="float64")
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q.values])
-        n = qm.shape[0]
-        dot_parts = np.empty((n, PQ_M), dtype=np.float64)
-        sq_parts = np.empty((n, PQ_M), dtype=np.float64)
-        for m in range(PQ_M):
-            cents_m, _ = books[m]
-            sub = qm[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            d = sub[:, None, :] - cents_m[None, :, :]
-            d *= d
-            idx = np.argmin(np.cumsum(d, axis=2)[:, :, -1], axis=1)
-            c = cents_m[idx]
-            qsub = qv[m * PQ_SUB : (m + 1) * PQ_SUB]
-            dot_parts[:, m] = np.cumsum(c * qsub, axis=1)[:, -1]
-            sq_parts[:, m] = np.cumsum(c * c, axis=1)[:, -1]
-        dots = np.cumsum(dot_parts, axis=1)[:, -1]
-        sqs = np.cumsum(sq_parts, axis=1)[:, -1]
-        return pd.Series(dots / (np.sqrt(sqs) * qnorm))
-
-    return adc
 
 
 def _pq_sql_parts(
@@ -3271,22 +2933,14 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     (guide §2.6: overlap independent jobs; the retrain-per-serve shape
     is this entry's whole point, so the training latency IS the measured
     cost — measured ~7 sequential jobs before, max(3, 3) + serve after)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_qq = pool.submit(inheritable_thread_target(spark)(lambda: _fetch_qq(spark, sf)))
-        f_cand = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _ivf_cand_assigned(spark, sf, qq=f_qq.result())
-            )
-        )
-        f_book = pool.submit(
-            inheritable_thread_target(spark)(lambda: _codebook_rows(_pq_fit(spark, sf)))
-        )
-        cand, book, qq = f_cand.result(), f_book.result(), f_qq.result()
-    return _pq_adc_topk(spark, sf, cand.select("vec_id", "q"), book=book, qq=qq)
+    embq = _km_quantized(spark, sf)
+    qq, rows, book = overlap(
+        spark,
+        lambda: _fetch_qq(spark, sf),
+        lambda: _lloyd(embq, KM_K, 1),
+        lambda: _codebook_rows(_pq_fit(spark, sf)),
+    )
+    return _pq_adc_topk(spark, _ivf_cand(embq, rows, qq).select("vec_id", "q"), book, qq)
 
 
 def _sql_serve_probes(probe_c: str) -> str:

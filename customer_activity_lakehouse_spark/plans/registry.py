@@ -54,6 +54,27 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def overlap(spark: SparkSession, *thunks: Callable[[], object]) -> list:
+    """Run independent driver-side chains — each a short series of Spark
+    jobs — from one driver thread apiece, so one chain's job latency
+    back-fills another's (guide §2.6); returns their results in argument
+    order. In pinned-thread mode each thread inherits the caller's local
+    properties and tags; with it off, ``inheritable_thread_target(spark)``
+    hands back the session rather than a decorator, and plain threads are
+    all there is to inherit. Every future is read after all have finished,
+    so a failing chain raises here."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    if not isinstance(inherit, SparkSession):  # pinned-thread mode is on
+        thunks = tuple(inherit(t) for t in thunks)
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return events_table(spark, sf_dir)

@@ -15,6 +15,7 @@ Contract under test:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from customer_activity_lakehouse_spark.plans.ann_index import (
@@ -269,9 +270,10 @@ def test_query_where_filters_and_widens_probes(spark, tmp_path):
     instead of silently under-returning (post-filtering an unfiltered
     top-k is the wrong plan — pinned below)."""
     from customer_activity_lakehouse_spark.plans.ann_index import (
-        _ordered_cells,
         query_ann_index_where,
     )
+
+    from .ann_twins import _ordered_cells
 
     idx = str(tmp_path / "idx")
     build_ann_index(spark, _corpus(spark, 0, 300), idx)
@@ -538,7 +540,7 @@ def test_sampled_training_deterministic_and_covering(spark):
     assert _train_divisor(1_000_000, 1000) == 1_000_000 // (KM_TRAIN_PER_CELL * 1000)
     assert _train_divisor(10**9, 31623) >= 100
 
-    from customer_activity_lakehouse_spark.plans.ml_ops import _km_assign
+    from .ann_twins import _km_assign
 
     embq = _quantize(_corpus(spark, 0, 400))
     c1 = _km_fit_scaled(embq, 12, divisor=3)
@@ -613,3 +615,59 @@ def test_refined_serve_is_exact_over_the_adc_pool(spark, tmp_path):
     adc5 = {int(r.vec_id) for r in query_ann_index(spark, idx, qq, k=5, exclude_id=0).collect()}
     ref5 = {int(r.vec_id) for r in refined}
     assert len(ref5 & bf) >= len(adc5 & bf)
+
+
+def test_ivf_kmeans_topk_empty_corpus_keeps_schema(spark, sf_correctness, tmp_path):
+    """A zero-row embeddings corpus trains no cell: the IVF entry returns
+    an empty frame with its declared schema instead of failing analysis
+    (the empty-input assignment keeps every input column)."""
+    from customer_activity_lakehouse_spark.plans.ml_ops import q_ann_ivf_kmeans_topk
+
+    spark.read.parquet(f"{sf_correctness}/embeddings.parquet").limit(0).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    out = q_ann_ivf_kmeans_topk(spark, str(tmp_path))
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("vec_id", "bigint"),
+        ("cos_sim", "double"),
+    ]
+
+
+def test_overlap_runs_without_pinned_threads(spark, sf_correctness, monkeypatch):
+    """With pinned-thread mode off, pyspark's inheritable_thread_target
+    hands back the session instead of a decorator; the driver-thread
+    overlap must still run every chain, with the pinned run's result."""
+    import py4j.clientserver
+    from pyspark import inheritable_thread_target
+
+    from customer_activity_lakehouse_spark.plans.ml_ops import q_ann_pq_topk
+
+    pinned = q_ann_pq_topk(spark, sf_correctness).collect()
+
+    class _NotClientServer:
+        pass
+
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", _NotClientServer)
+    assert inheritable_thread_target(spark) is spark  # the unpinned branch
+    assert q_ann_pq_topk(spark, sf_correctness).collect() == pinned
+
+
+def test_build_commits_codes_only_after_metadata(spark, tmp_path, monkeypatch):
+    """The codes table is the index's entry point: it must never land
+    without the centroids and codebooks it was encoded against. A failing
+    pq_codebooks commit fails the build with no codes version."""
+    import customer_activity_lakehouse_spark.sources.snapshots as snapshots
+
+    real_commit = snapshots.commit_append
+
+    def commit_append(spark, table_dir, *args, **kwargs):
+        if table_dir.endswith("/pq_codebooks"):
+            raise RuntimeError("injected pq_codebooks commit failure")
+        return real_commit(spark, table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "commit_append", commit_append)
+    idx = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="injected"):
+        build_ann_index(spark, _corpus(spark, 0, 120), idx)
+    assert _list_versions(spark, f"{idx}/codes") == []

@@ -13,7 +13,9 @@ mysterious oracle hash drift:
 - `_pq_assign` == `_pq_assign_expr` — exact per-(vec, m) codeword;
 - `_adc_code_cos_udf` (both the fixed-query and per-row-query variants)
   == the `_adc_cos` expression over `_books_arr` — exact UNROUNDED
-  cosine doubles.
+  cosine doubles;
+- the encode-in-kernel ADC path over raw vectors == the ADC over the
+  same vectors' stored codes.
 """
 
 from __future__ import annotations
@@ -22,26 +24,28 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from customer_activity_lakehouse_spark.plans.ann_index import (
-    _adc_code_cos_udf,
-    _adc_cos,
-    _books_arr,
     _encode_cells,
     _quantize,
-    _seed_centroids_scaled,
     build_ann_index,
 )
 from customer_activity_lakehouse_spark.plans.ml_ops import (
     _codebook_rows,
-    _km_assign,
-    _km_assign_expr,
     _km_update,
-    _pq_assign,
-    _pq_assign_expr,
     _pq_fit_frame,
     _pq_subrows,
 )
+from customer_activity_lakehouse_spark.plans.np_kernels import adc_udf as _adc_code_cos_udf
 from customer_activity_lakehouse_spark.sources.snapshots import read_snapshot
 
+from .ann_twins import (
+    _adc_cos,
+    _books_arr,
+    _km_assign,
+    _km_assign_expr,
+    _pq_assign,
+    _pq_assign_expr,
+    _seed_centroids_scaled,
+)
 from .test_ann_index import _corpus
 
 
@@ -110,6 +114,27 @@ def test_adc_kernel_matches_expression(spark, tmp_path):
         for r in with_q.select("vec_id", adc_row("code", "qq").alias("cos")).collect()
     }
     assert got_row == want
+
+
+def test_adc_encode_path_matches_stored_codes(spark, tmp_path):
+    """The in-plan PQ entries score RAW quantized vectors (encoded inside
+    the kernel); the serve scores the STORED codes of the same vectors.
+    Encode-then-lookup must give the serve's exact doubles."""
+    idx = str(tmp_path / "idx")
+    corpus = _corpus(spark, 0, 300)
+    build_ann_index(spark, corpus, idx)
+    embq = _quantize(corpus)
+    book = _codebook_rows(read_snapshot(spark, f"{idx}/pq_codebooks"))
+    qq = np.asarray(embq.filter(F.col("vec_id") == 7).head()["q"], dtype=np.int64)
+    raw = _adc_code_cos_udf(spark, book, qq, encode=True)
+    got = {r["vec_id"]: r["cos"] for r in embq.select("vec_id", raw("q").alias("cos")).collect()}
+    stored = _adc_code_cos_udf(spark, book, qq)
+    codes = read_snapshot(spark, f"{idx}/codes")
+    want = {
+        r["vec_id"]: r["cos"]
+        for r in codes.select("vec_id", stored("code").alias("cos")).collect()
+    }
+    assert got == want
 
 
 def test_ivf_probe_driver_ranking_matches_expression(spark):

@@ -31,6 +31,32 @@ def test_coverage_loaded_and_sane():
     assert all(isinstance(r, int) and r >= 1 for r in COVERAGE.values())
 
 
+def test_coverage_snapshot_is_current():
+    """The committed coverage.json records the at-green fingerprints that
+    demote rewritten entries, so it must be refreshed as soon as a
+    round's CORRECTNESS_r*.json lands — before any query code changes.
+    A snapshot whose newest round is behind the newest results file
+    means that refresh was skipped."""
+    from customer_activity_lakehouse_spark.plans.coverage import (
+        _CORRECTNESS_RE,
+        _REPO_ROOT,
+        _read_snapshot,
+    )
+
+    rounds = [
+        int(m.group(1))
+        for p in _REPO_ROOT.glob("CORRECTNESS_r*.json")
+        if (m := _CORRECTNESS_RE.search(p.name))
+    ]
+    snap_rounds, _ = _read_snapshot()
+    assert snap_rounds and max(snap_rounds.values()) >= max(rounds), (
+        f"plans/coverage.json stops at round {max(snap_rounds.values(), default=0)} "
+        f"but CORRECTNESS_r{max(rounds):02d}.json exists — run "
+        "`python -m customer_activity_lakehouse_spark.plans.coverage` "
+        "before editing any query code"
+    )
+
+
 def test_reorder_preserves_catalog():
     assert set(QUERIES) == set(_MERGED)
     assert len(QUERIES) == len(_MERGED)

@@ -1556,7 +1556,7 @@ def test_rename_column_metadata_only(spark, tmp_path):
     )
 
     t = str(tmp_path / "tbl")
-    commit_append(spark, t, _df(spark, 0, 10).repartition(2), stats_cols=["id"])
+    commit_append(spark, t, _df(spark, 0, 10).repartitionByRange(2, "id"), stats_cols=["id"])
     before_files = sorted(read_snapshot(spark, t).inputFiles())
     v = rename_snapshot_column(spark, t, "v", "doubled")
     assert v == 2
